@@ -50,12 +50,9 @@ class PipeConfig:
     sleep_millis_when_peek_failed: int = 5_000    # config.rs:156-159
     sleep_millis_when_peek_is_empty: int = 5_000  # config.rs:161-164
     sleep_millis_when_write_failed: int = 5_000   # config.rs:166-169
-    # after_sync_write paces SERIALIZED per-table ClickHouse writes
-    # (pipes/postgres.rs:448-451); our per-table merges run as
-    # concurrent Spark jobs on disjoint stores, so this knob is kept
-    # for config-surface parity but the loop applies only the
-    # per-iteration sleep
-    sleep_millis_after_sync_write: int = 100      # config.rs:176-179
+    # no sleep_millis_after_sync_write (config.rs:176-179): it paces
+    # SERIALIZED per-table ClickHouse writes (pipes/postgres.rs:448-451),
+    # and the per-table merges here run concurrently on disjoint stores
     # sink knobs (ReplacingMergeTree analogs, config.rs:112-122)
     min_age_to_force_merge_seconds: int = 60
     index_granularity: int = 8192
@@ -119,6 +116,8 @@ class PipeConfig:
             "peek_changes_timeout_millis",
             "sleep_millis_after_sync_iteration",
             "sleep_millis_when_peek_failed",
+            "sleep_millis_when_peek_is_empty",
+            "sleep_millis_when_write_failed",
         ):
             if key in src:
                 kw[key] = src[key]

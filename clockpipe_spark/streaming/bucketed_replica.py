@@ -262,6 +262,15 @@ class BucketedReplicaStore:
             return self._compact(spark, keys)
         return v
 
+    def truncate(self, spark: SparkSession) -> int | None:
+        """K3 — TRUNCATE propagation: commit a manifest with no buckets
+        and no deltas (absent bucket == empty bucket on read), keeping
+        the merge keys. Older manifests stay readable."""
+        if self.current_version() < 0:
+            return None
+        _, _, keys = self._parts()
+        return self._commit({}, [], keys)
+
     def compact(self, spark: SparkSession, keys: Sequence[str] | None = None) -> int:
         """Fold the pending delta log into the base, rewriting only the
         buckets the deltas touch. No-op if the log is empty."""

@@ -1,20 +1,33 @@
-"""Config-driven multi-table sync job — the reference's end-to-end
-product shape (main.rs:27-49 -> pipes/postgres.rs:748-769): read a JSON
-config, snapshot each configured table (with masking and the idempotent
-skip guard), then drain the change log with per-table routing into one
-replica store per table.
+"""The change loop every CDC pipe runs, plus the config-driven
+multi-table sync job — the reference's end-to-end product shape
+(main.rs:27-49 -> pipes/postgres.rs:748-769).
 
-Source endpoints are parquet directories in this harness; the operator
-chain (align -> mask -> cast -> merge) is the deployment-real part and
-is shared verbatim with the streaming embodiment.
+- ``apply_change_batch`` applies one peeked batch: per table, the K3
+  truncate cut, keep-last per key and the store merge, with the tables
+  running concurrently (pipes/postgres.rs:295-446).
+- ``run_change_loop`` is the loop driver: retry without advancing and
+  the reference's four pacing classes, all read from ``PipeConfig``
+  (pipes/postgres.rs:260-517).
+- ``SyncJob`` reads a JSON config, snapshots each configured table
+  (masking, idempotent skip guard), then drains the change log with
+  per-table routing into one replica store per table — batch-wise with
+  a persisted cursor (``sync_loop``) or as a Structured Streaming query
+  whose checkpoint plays the cursor (``sync_stream``).
+
+``streaming/live_pipe.LivePostgresRoutedPipe`` runs the same core and
+driver against a live PostgreSQL slot.  Source endpoints are parquet
+directories here; the operator chain (align -> mask -> cast -> merge)
+is the deployment-real part.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,6 +35,7 @@ from pyspark.sql import functions as F
 from clockpipe_spark.cdc.changelog import changelog_from_events
 from clockpipe_spark.cdc.ops import apply_masks, keep_last_by_key
 from clockpipe_spark.config import PipeConfig
+from clockpipe_spark.streaming.replica import ReplicaStore
 
 
 class WriteFailedError(RuntimeError):
@@ -29,9 +43,120 @@ class WriteFailedError(RuntimeError):
     peek).  The reference backs off with ``sleep_millis_when_write_failed``
     for this class and ``sleep_millis_when_peek_failed`` for peek
     failures (pipes/postgres.rs:277 vs :408-446); tagging the phase lets
-    sync_loop pick the matching knob.  Either way the cursor is
+    the loop driver pick the matching knob.  Either way the cursor is
     untouched, so the retry re-peeks the same batch."""
-from clockpipe_spark.streaming.replica import ReplicaStore
+
+
+def apply_change_batch(
+    spark: SparkSession,
+    op_max: dict[str, dict[str, int]],
+    slice_for: Callable[[str], tuple[object, DataFrame, Sequence[str]]],
+) -> None:
+    """Apply one peeked batch to every table in ``op_max`` (table -> op
+    -> max seq of that op in the batch, from the peek's stats job).
+    ``slice_for(table)`` gives the table's (store, changes, merge keys);
+    ``changes`` carries ``seq`` and ``op`` columns.
+
+    Per table: a TRUNCATE wipes the store inline and only changes after
+    the batch's last truncate survive (K3, pipes/postgres.rs:391-417);
+    then keep-last per key and ``store.merge_changes``.  Tables are
+    independent Spark jobs on disjoint stores, so they run concurrently,
+    each truncate inside its table's task.  Every table's task runs to
+    the end; a failure is then raised as ``WriteFailedError``, and the
+    caller advances its cursor only when this returns."""
+
+    def apply_one(tbl: str) -> None:
+        store, changes, keys = slice_for(tbl)
+        ops = op_max[tbl]
+        cut = ops.get("T")
+        if cut is not None:
+            store.truncate(spark)
+            changes = changes.filter(F.col("seq") > cut)
+        last_write = max((ops[op] for op in "IUD" if op in ops), default=None)
+        # merge only when a write survives the cut: an all-pre-truncate
+        # batch would otherwise rewrite a full state version for nothing
+        if last_write is None or (cut is not None and last_write <= cut):
+            return
+        store.merge_changes(spark, keep_last_by_key(changes, keys, "seq"), keys)
+
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        futures = [pool.submit(apply_one, tbl) for tbl in sorted(op_max)]
+    for fut in futures:
+        ex = fut.exception()
+        if ex is not None:
+            raise WriteFailedError(str(ex)) from ex
+
+
+def run_change_loop(
+    iteration: Callable[[], dict],
+    config: PipeConfig,
+    max_iterations: int | None = None,
+    sleep: bool = False,
+    max_retries: int = 3,
+    daemon: bool = False,
+) -> int:
+    """Drive ``iteration`` (one peek -> apply -> advance turn; an empty
+    result means drained) and return the productive iterations run.
+
+    A failed iteration is retried WITHOUT advancing the cursor (T3,
+    pipes/postgres.rs:433-452): the next attempt re-peeks the same
+    batch; the keyed merge makes the replay safe.  The retry backoff
+    matches the reference's failure classes:
+    ``sleep_millis_when_write_failed`` when the iteration died in its
+    write phase (WriteFailedError, pipes/postgres.rs:408-446),
+    ``sleep_millis_when_peek_failed`` otherwise (config.rs:156-159).
+    Each productive iteration paces by
+    ``sleep_millis_after_sync_iteration`` (:513).  Only ``Exception``
+    is retried, so a ``BaseException`` still stops the loop.
+
+    ``daemon=True`` is the reference's long-running shape: an empty
+    peek sleeps ``sleep_millis_when_peek_is_empty`` and keeps polling
+    (pipes/postgres.rs:284-291) instead of returning; bound it with
+    ``max_iterations`` (every poll counts) or run forever.
+    """
+
+    def pause(millis: int) -> None:
+        if sleep:
+            time.sleep(millis / 1000)
+
+    it = polls = failures = 0
+    while max_iterations is None or (polls if daemon else it) < max_iterations:
+        polls += 1
+        try:
+            counters = iteration()
+        except Exception as ex:
+            failures += 1
+            if failures > max_retries:
+                raise
+            logging.getLogger(__name__).warning(
+                "sync iteration failed (%d of %d retries), retrying without "
+                "advancing", failures, max_retries, exc_info=True,
+            )
+            pause(
+                config.sleep_millis_when_write_failed
+                if isinstance(ex, WriteFailedError)
+                else config.sleep_millis_when_peek_failed
+            )
+            continue  # cursor untouched -> same batch re-peeked
+        failures = 0
+        if not counters:
+            if not daemon:
+                break
+            pause(config.sleep_millis_when_peek_is_empty)
+            continue
+        it += 1
+        pause(config.sleep_millis_after_sync_iteration)
+    return it
+
+
+def _batch_stats(batch: DataFrame) -> list:
+    """ONE job yields emptiness + per-(table, op) counters + max seq —
+    per-iteration fixed cost is what bounds small-batch throughput."""
+    return (
+        batch.groupBy("tbl", "op")
+        .agg(F.count("*").alias("n"), F.max("seq").alias("mx"))
+        .collect()
+    )
 
 
 class SyncJob:
@@ -176,14 +301,30 @@ class SyncJob:
             )
         return keys
 
-    def sync_iteration(self) -> dict[tuple[str, str], int]:
-        """peek -> route per table -> dedup -> merge each table's store ->
-        advance (after ALL tables committed). Returns (table, op) -> n
-        counters, the reference's per-iteration log line.
+    def _apply(self, batch: DataFrame, stats: list) -> None:
+        """Route a peeked batch per table (A2) through apply_change_batch."""
+        op_max: dict[str, dict[str, int]] = {}
+        for r in stats:
+            op_max.setdefault(r["tbl"], {})[r["op"]] = r["mx"]
 
-        Peek is a cursor-range predicate pushed to the parquet scan (no
-        global sort over the pending tail — see ParquetCdcPipe); sparse
-        seq gaps wider than the cap are bridged by one min-seq probe."""
+        def slice_for(tbl: str):
+            part = batch.filter(F.col("tbl") == tbl)
+            keys = self.merge_keys_for(tbl, part.columns)
+            changes = part.select("seq", "op", *keys, "value", "ts")
+            return self.store_for(tbl), changes, keys
+
+        apply_change_batch(self.spark, op_max, slice_for)
+
+    def sync_iteration(self) -> dict[tuple[str, str], int]:
+        """peek -> apply per table -> advance (after ALL tables
+        committed). Returns (table, op) -> n counters, the reference's
+        per-iteration log line.
+
+        The peek is a cursor-range predicate (seq in (cursor, cursor+cap])
+        pushed into the parquet scan — NOT a global orderBy(seq).limit(cap),
+        which re-sorts the entire pending tail every iteration. Sparse seq
+        (gaps wider than the cap) is bridged by one min-seq probe that
+        jumps the window forward; dense logs never pay it."""
         cursor = self.read_cursor()
         cap = self.config.peek_changes_limit
         clog = self.changelog()
@@ -192,13 +333,7 @@ class SyncJob:
             batch = clog.filter(
                 (F.col("seq") > start) & (F.col("seq") <= start + cap)
             ).cache()
-            # ONE job yields emptiness + per-(table,op) counters + last LSN —
-            # per-iteration fixed cost is what bounds small-batch throughput
-            stats = (
-                batch.groupBy("tbl", "op")
-                .agg(F.count("*").alias("n"), F.max("seq").alias("mx"))
-                .collect()
-            )
+            stats = _batch_stats(batch)
             if stats:
                 break
             batch.unpersist()
@@ -206,34 +341,12 @@ class SyncJob:
             if nxt is None:
                 return {}
             start = nxt - 1  # second window contains nxt -> non-empty
-        counters = {(r["tbl"], r["op"]): r["n"] for r in stats}
-        last_seq = max(r["mx"] for r in stats)
-
-        def merge_one(tbl: str) -> None:
-            part = batch.filter(F.col("tbl") == tbl)
-            keys = self.merge_keys_for(tbl, part.columns)
-            deduped = keep_last_by_key(part, keys, "seq")
-            self.store_for(tbl).merge_changes(
-                self.spark,
-                deduped.select("seq", "op", *keys, "value", "ts"),
-                keys,
-            )
-
-        # per-table merges are independent Spark jobs on disjoint target
-        # dirs -> submit concurrently (cluster slots stay busy instead of
-        # serializing 4 small jobs)
-        tables = sorted({t for t, _ in counters})
-        from concurrent.futures import ThreadPoolExecutor
-
         try:
-            with ThreadPoolExecutor(max_workers=min(8, len(tables))) as pool:
-                list(pool.map(merge_one, tables))
-        except Exception as ex:
+            self._apply(batch, stats)
+        finally:
             batch.unpersist()
-            raise WriteFailedError(str(ex)) from ex
-        batch.unpersist()
-        self.advance_cursor(last_seq)
-        return counters
+        self.advance_cursor(max(r["mx"] for r in stats))
+        return {(r["tbl"], r["op"]): r["n"] for r in stats}
 
     def sync_loop(
         self,
@@ -242,55 +355,37 @@ class SyncJob:
         max_retries: int = 3,
         daemon: bool = False,
     ) -> int:
-        """Drain the log. A failed iteration is retried WITHOUT advancing
-        the cursor (T3, pipes/postgres.rs:433-452): the next attempt
-        re-peeks the same batch; the keyed merge makes the replay safe.
-        The retry backoff matches the reference's failure classes:
-        ``sleep_millis_when_write_failed`` when the iteration died in
-        its write phase (WriteFailedError, pipes/postgres.rs:408-446),
-        ``sleep_millis_when_peek_failed`` otherwise (config.rs:156-159).
+        """Drain the log (or poll it, ``daemon=True``) with
+        ``run_change_loop``'s retry and pacing rules."""
+        return run_change_loop(
+            self.sync_iteration, self.config, max_iterations,
+            sleep=sleep, max_retries=max_retries, daemon=daemon,
+        )
 
-        ``daemon=True`` is the reference's long-running shape: an empty
-        peek sleeps ``sleep_millis_when_peek_is_empty`` and keeps
-        polling (pipes/postgres.rs:284-291) instead of returning; bound
-        it with ``max_iterations`` (empty polls count) or run forever.
-        """
-        it = 0
-        polls = 0
-        failures = 0
-        while max_iterations is None or (
-            polls if daemon else it
-        ) < max_iterations:
-            polls += 1
+    def sync_stream(self, changelog: DataFrame, checkpoint_dir: str):
+        """Structured Streaming embodiment over a streaming ``changelog``
+        (``spark.readStream``): each micro-batch runs the same stats job
+        and ``apply_change_batch`` as ``sync_iteration``, and the
+        checkpoint commits its offsets only after foreachBatch returns —
+        the checkpoint plays the cursor with the same post-write order.
+
+        Uses availableNow, so the query drains what is there and stops; a
+        deployment would trigger every sleep_millis_after_sync_iteration
+        to match the reference cadence (T1)."""
+
+        def apply_batch(batch: DataFrame, batch_id: int) -> None:
+            batch = batch.cache()
             try:
-                counters = self.sync_iteration()
-            except WriteFailedError:
-                failures += 1
-                if failures > max_retries:
-                    raise
-                if sleep:
-                    time.sleep(self.config.sleep_millis_when_write_failed / 1000)
-                continue  # cursor untouched -> same batch re-peeked
-            except Exception:
-                failures += 1
-                if failures > max_retries:
-                    raise
-                if sleep:
-                    time.sleep(self.config.sleep_millis_when_peek_failed / 1000)
-                continue  # cursor untouched -> same batch re-peeked
-            failures = 0
-            if not counters:
-                if not daemon:
-                    break
-                if sleep:
-                    time.sleep(
-                        self.config.sleep_millis_when_peek_is_empty / 1000
-                    )
-                continue
-            it += 1
-            if sleep:
-                time.sleep(self.config.sleep_millis_after_sync_iteration / 1000)
-        return it
+                self._apply(batch, _batch_stats(batch))
+            finally:
+                batch.unpersist()
+
+        return (
+            changelog.writeStream.foreachBatch(apply_batch)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
 
     def run(self, max_iterations: int | None = None) -> dict:
         self.initialize()

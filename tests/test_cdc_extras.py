@@ -12,7 +12,7 @@ from clockpipe_spark.cdc.mongo_schema import (
 )
 from clockpipe_spark.cdc.ops import fill_unchanged_toast
 from clockpipe_spark.config import PipeConfig
-from clockpipe_spark.streaming.pipeline import ParquetCdcPipe
+from clockpipe_spark.sync_job import SyncJob
 
 
 def test_toast_backfill(spark):
@@ -89,17 +89,9 @@ def truncate_events(spark, tmp_path):
     return d
 
 
-def test_truncate_propagation(spark, truncate_events, tmp_path, monkeypatch):
-    # map 'truncate' -> 'T' by monkeypatching the changelog op mapping at
-    # the pipe level: easiest is to pre-shape our own changelog
-    import clockpipe_spark.streaming.pipeline as pl
-    from pyspark.sql import functions as F
-
-    pipe = ParquetCdcPipe(
-        spark, truncate_events, str(tmp_path / "t"), PipeConfig(peek_changes_limit=10)
-    )
-
-    def changelog(self=pipe):
+def test_truncate_propagation(spark, truncate_events, tmp_path):
+    # map 'truncate' -> 'T' by pre-shaping the job's own changelog
+    def changelog(spark):
         ev = spark.read.parquet(truncate_events)
         return ev.select(
             F.col("event_id").alias("seq"),
@@ -114,9 +106,14 @@ def test_truncate_propagation(spark, truncate_events, tmp_path, monkeypatch):
             "props",
         )
 
-    pipe.changelog = changelog
-    pipe.run_pipe()
-    got = {r["user_id"]: r["value"] for r in pipe.store.read(spark).collect()}
+    job = SyncJob(
+        spark, PipeConfig(peek_changes_limit=10), truncate_events,
+        str(tmp_path / "t"), changelog_fn=changelog,
+    )
+    job.run()
+    got = {
+        r["user_id"]: r["value"] for r in job.store_for("t0").read(spark).collect()
+    }
     # rows 1 and 2 wiped by the truncate at seq 3; only user 3 survives
     assert got == {3: 35.0}
 

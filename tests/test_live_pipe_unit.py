@@ -59,6 +59,8 @@ class SeamDB:
             return self.spark.createDataFrame(_T_COLS, _COLS_SCHEMA)
         if "peek_binary_changes" in q:
             batch = self.frame_batches.pop(0) if self.frame_batches else []
+            if isinstance(batch, Exception):  # scripted peek failure
+                raise batch
             return self.spark.createDataFrame(batch, _FRAME_SCHEMA)
         if "pg_class c JOIN pg_namespace" in q:
             return self.spark.createDataFrame(
@@ -91,12 +93,42 @@ class SeamDB:
         self.ddl.append(sql)
 
 
+class SlotSeamDB(SeamDB):
+    """SeamDB with replication-slot semantics: each peek returns the
+    first transaction whose commit lies past the confirmed LSN, and
+    only ``pg_replication_slot_advance`` moves that LSN — so a batch
+    that was not advanced is peeked again."""
+
+    def __init__(self, spark, txns, tables=None):
+        super().__init__(spark, [], tables=tables)
+        self.txns = txns
+        self.confirmed = 0
+
+    def reader(self, options):
+        if "peek_binary_changes" not in options.get("query", ""):
+            return super().reader(options)
+        pending = [x for x in self.txns if _lsn(x[-1][0]) > self.confirmed]
+        return self.spark.createDataFrame(
+            pending[0] if pending else [], _FRAME_SCHEMA
+        )
+
+    def sql_runner(self, sql):
+        super().sql_runner(sql)
+        if "pg_replication_slot_advance" in sql:
+            self.confirmed = _lsn(sql.split("'")[3])
+
+
+def _lsn(text: str) -> int:
+    hi, lo = text.split("/")
+    return (int(hi, 16) << 32) | int(lo, 16)
+
+
 def _hex(frame: bytes) -> str:
     return frame.hex()
 
 
-def _pipe(spark, tmp_path, frame_batches, tables=None):
-    db = SeamDB(spark, frame_batches, tables=tables)
+def _pipe(spark, tmp_path, frame_batches, tables=None, db_cls=SeamDB):
+    db = db_cls(spark, frame_batches, tables=tables)
     src = JdbcPostgresSource(
         spark, "jdbc:postgresql://unused/db",
         reader=db.reader, sql_runner=db.sql_runner,
@@ -222,8 +254,8 @@ def test_daemon_mode_polls_through_empty_peeks(spark, tmp_path, monkeypatch):
     [empty, after-iteration, empty, empty]."""
     import types
 
+    from clockpipe_spark import sync_job as sj
     from clockpipe_spark.config import PipeConfig
-    from clockpipe_spark.streaming import live_pipe as lp
 
     write_batch = [
         ("0/10", "7", _hex(encode_begin())),
@@ -237,15 +269,137 @@ def test_daemon_mode_polls_through_empty_peeks(spark, tmp_path, monkeypatch):
         sleep_millis_after_sync_iteration=1_000,
     )
     slept: list[float] = []
-    # patch live_pipe's `time` reference only — a global time.sleep
-    # patch also catches Spark/py4j internal polling (test_sync_job
-    # lesson)
+    # patch the loop driver's `time` reference only — a global
+    # time.sleep patch also catches Spark/py4j internal polling
+    # (test_sync_job lesson)
     monkeypatch.setattr(
-        lp, "time", types.SimpleNamespace(sleep=slept.append)
+        sj, "time", types.SimpleNamespace(sleep=slept.append)
     )
     done = pipe.sync_loop(max_iterations=4, sleep=True, daemon=True)
     assert done == 1
     assert slept == [17.0, 1.0, 17.0, 17.0]
+
+
+def test_daemon_mode_retries_a_failed_peek(spark, tmp_path, monkeypatch):
+    """A transient peek failure (a dropped JDBC connection) must not
+    stop the daemon: it sleeps when_peek_failed, keeps polling and
+    applies the batch on the next poll.  Batches: failure, write,
+    empty, empty -> 1 productive iteration, sleeps = [peek-failed,
+    after-iteration, empty, empty]."""
+    import types
+
+    from clockpipe_spark import sync_job as sj
+    from clockpipe_spark.config import PipeConfig
+
+    write_batch = [
+        ("0/10", "7", _hex(encode_begin())),
+        ("0/20", "7", _hex(encode_insert(500, [("t", "2", None), ("t", "b", None)]))),
+        ("0/30", "7", _hex(encode_commit())),
+    ]
+    pipe, db = _pipe(
+        spark, tmp_path,
+        [RuntimeError("injected peek failure"), write_batch, [], []],
+    )
+    pipe.first_sync()
+    pipe.config = PipeConfig(
+        sleep_millis_when_peek_failed=11_000,
+        sleep_millis_when_peek_is_empty=17_000,
+        sleep_millis_after_sync_iteration=1_000,
+    )
+    slept: list[float] = []
+    monkeypatch.setattr(
+        sj, "time", types.SimpleNamespace(sleep=slept.append)
+    )
+    done = pipe.sync_loop(max_iterations=4, sleep=True, daemon=True)
+    assert done == 1
+    assert slept == [11.0, 1.0, 17.0, 17.0]
+    got = {r["id"]: r["v"] for r in pipe.replica("t1").collect()}
+    assert got == {1: "a", 2: "b"}
+
+
+def _fault_txns():
+    """Three transactions over t1 (oid 500) and t2 (oid 600), each
+    writing both tables."""
+    from clockpipe_spark.cdc.pgoutput import encode_delete, encode_update
+
+    def txn(first_lsn, writes):
+        lsns = range(first_lsn, first_lsn + 16 * (len(writes) + 2), 16)
+        data = [encode_begin(), *writes, encode_commit()]
+        return [(f"0/{lsn:X}", "7", _hex(d)) for lsn, d in zip(lsns, data)]
+
+    return [
+        txn(0x10, [encode_insert(500, [("t", "2", None), ("t", "b", None)]),
+                   encode_insert(600, [("t", "3", None), ("t", "c", None)])]),
+        txn(0x100, [encode_update(500, [("t", "1", None), ("t", "a2", None)]),
+                    encode_insert(600, [("t", "4", None), ("t", "d", None)])]),
+        txn(0x200, [encode_delete(500, [("t", "2", None)]),
+                    encode_update(600, [("t", "3", None), ("t", "c2", None)])]),
+    ]
+
+
+def test_fault_injection_replay_converges(spark, tmp_path):
+    """One fault at each phase boundary, each in its own transaction —
+    in the peek, in t2's merge while t1 commits, and in advance_slot.
+    The retried drain converges to a clean run's replicas, and the slot
+    never advances past a merge that did not commit."""
+    tables = {"t1": (500, [(1, "a")]), "t2": (600, [(2, "x")])}
+    clean, _ = _pipe(spark, tmp_path / "clean", _fault_txns(),
+                     tables=tables, db_cls=SlotSeamDB)
+    clean.first_sync()
+    clean.sync_loop()
+
+    pipe, db = _pipe(spark, tmp_path / "faulty", _fault_txns(),
+                     tables=tables, db_cls=SlotSeamDB)
+    pipe.first_sync()
+    # write-frame LSNs per table; a write frame's relid follows its
+    # one-byte message type
+    writes = {
+        t: [_lsn(lsn) for x in db.txns for lsn, _, data in x[1:-1]
+            if int(data[2:10], 16) == oid]
+        for t, (oid, _) in tables.items()
+    }
+    calls = {"peek": 0, "merge": 0, "advance": 0}
+
+    real_peek = pipe.source.peek_changes
+
+    def flaky_peek(*a, **kw):
+        calls["peek"] += 1
+        if calls["peek"] == 1:
+            raise RuntimeError("injected peek failure")
+        return real_peek(*a, **kw)
+
+    t2 = pipe.stores["t2"]
+    real_merge = t2.merge_changes
+
+    def flaky_merge(*a, **kw):
+        calls["merge"] += 1
+        if calls["merge"] == 2:
+            raise RuntimeError("injected merge failure")
+        return real_merge(*a, **kw)
+
+    real_advance = pipe.source.advance_slot
+
+    def checked_advance(slot, lsn):
+        calls["advance"] += 1
+        # every write up to the advance target must already be committed
+        for t in tables:
+            committed = pipe.stores[t].read_raw(spark).agg(
+                {"last_seq": "max"}).first()[0]
+            assert committed == max(w for w in writes[t] if w <= lsn), (t, lsn)
+        if calls["advance"] == 3:
+            raise RuntimeError("injected advance failure")
+        return real_advance(slot, lsn)
+
+    pipe.source.peek_changes = flaky_peek
+    t2.merge_changes = flaky_merge
+    pipe.source.advance_slot = checked_advance
+    assert pipe.sync_loop() == 3
+    assert calls == {"peek": 7, "merge": 5, "advance": 4}
+    assert db.confirmed == _lsn(db.txns[-1][-1][0])
+    for t in tables:
+        got = {r["id"]: r["v"] for r in pipe.replica(t).collect()}
+        assert got == {r["id"]: r["v"] for r in clean.replica(t).collect()}, t
+    assert {r["id"]: r["v"] for r in pipe.replica("t1").collect()} == {1: "a2"}
 
 
 def _apply_model(snapshot, ops):
