@@ -77,11 +77,12 @@ def apply_masks(df: DataFrame, mask_columns: Sequence[str]) -> DataFrame:
     """P2 — replace configured columns with typed NULLs before any cast
     (adapter/mod.rs:183-185; config.rs:91-94, 230-231)."""
     masked = set(mask_columns)
-    by_name = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     return df.select(
         *[
-            mask_column(by_name[c]).alias(c) if c in masked else F.col(c)
-            for c in df.columns
+            mask_column(f.dataType).alias(f.name)
+            if f.name in masked
+            else F.col(f.name)
+            for f in df.schema.fields
         ]
     )
 

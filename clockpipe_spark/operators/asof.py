@@ -26,6 +26,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from clockpipe_spark.functions.sql import sql_ident
+
 
 def asof_join(
     left: DataFrame,
@@ -56,35 +58,36 @@ def asof_join(
     # so right sorts FIRST for backward (preceding frame) and LAST-but-
     # adjacent for forward (following frame) — i.e. left first.
     l_side, r_side = (1, 0) if direction == "backward" else (0, 1)
-    # selectExpr strings throughout (r21, guide §1.2 driver boundary):
-    # the Column-by-Column build issued ~800 py4j round trips per call
+    # SQL strings throughout (r21, guide §1.2 driver boundary): the
+    # Column-by-Column build issued ~800 py4j round trips per call
     # (~1.2 s profiled, 80% of the 3 asof queries' build wall); the same
-    # trees parse JVM-side in a handful of calls. Equivalence pinned by
+    # trees parse JVM-side in a handful of calls. Only the typed NULLs
+    # are Columns, cast with the DataType itself: a rendered type string
+    # does not quote struct field names. Equivalence pinned by
     # tools/plan_equiv (optimizedPlan match modulo expr ids) in
     # tests/test_asof.py.
-    q = "`{}`".format
+    q = sql_ident
     on_sql = q(on)
-    on_type = right.schema[on].dataType.simpleString()
+    r_val = {c: q(f"__r_{c}") for c in value_cols}
     struct_sql = "struct({})".format(", ".join(q(c) for c in lcols))
-    l_tagged = left.selectExpr(
-        *[q(c) for c in by],
-        on_sql,
-        f"{l_side} AS __side",
-        f"CAST(NULL AS {on_type}) AS __r_on",
+    l_tagged = left.select(
+        *[F.expr(q(c)) for c in by],
+        F.expr(on_sql),
+        F.expr(f"{l_side} AS __side"),
+        F.lit(None).cast(right.schema[on].dataType).alias("__r_on"),
         *[
-            f"CAST(NULL AS {right.schema[c].dataType.simpleString()}) AS `__r_{c}`"
+            F.lit(None).cast(right.schema[c].dataType).alias(f"__r_{c}")
             for c in value_cols
         ],
-        f"{struct_sql} AS __l",
+        F.expr(f"{struct_sql} AS __l"),
     )
-    l_struct_type = l_tagged.schema["__l"].dataType.simpleString()
-    r_tagged = right.selectExpr(
-        *[q(c) for c in by],
-        on_sql,
-        f"{r_side} AS __side",
-        f"{on_sql} AS __r_on",
-        *[f"{q(c)} AS `__r_{c}`" for c in value_cols],
-        f"CAST(NULL AS {l_struct_type}) AS __l",
+    r_tagged = right.select(
+        *[F.expr(q(c)) for c in by],
+        F.expr(on_sql),
+        F.expr(f"{r_side} AS __side"),
+        F.expr(f"{on_sql} AS __r_on"),
+        *[F.expr(f"{q(c)} AS {r_val[c]}") for c in value_cols],
+        F.lit(None).cast(l_tagged.schema["__l"].dataType).alias("__l"),
     )
     unioned = l_tagged.unionByName(r_tagged)
     over = (
@@ -105,7 +108,7 @@ def asof_join(
         "__l",
         f"{fn}(__r_on, true) {over} AS __r_on",
         *[
-            f"{fn}(`__r_{c}`, true) {over} AS `__r_{c}`"
+            f"{fn}({r_val[c]}, true) {over} AS {r_val[c]}"
             for c in value_cols
         ],
     )
@@ -122,11 +125,11 @@ def asof_join(
         picked = picked.selectExpr(
             "__l",
             *[
-                f"CASE WHEN {in_tol} THEN `__r_{c}` END AS `__r_{c}`"
+                f"CASE WHEN {in_tol} THEN {r_val[c]} END AS {r_val[c]}"
                 for c in value_cols
             ],
         )
     return picked.selectExpr(
         *[f"__l.{q(c)} AS {q(c)}" for c in lcols],
-        *[f"`__r_{c}` AS {q(c + suffix)}" for c in value_cols],
+        *[f"{r_val[c]} AS {q(c + suffix)}" for c in value_cols],
     )

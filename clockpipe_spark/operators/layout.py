@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from clockpipe_spark.functions.sql import sql_ident
+
 MORTON_BITS = 21  # 2 x 21 interleaved bits stay below 2^63
 
 
@@ -41,6 +43,7 @@ def quantize_expr(col: str, lo: str, hi: str, bits: int = MORTON_BITS) -> Column
     micro-precision timestamps (e.g. div 1000) when the range exceeds
     ~70 days."""
     top = (1 << bits) - 1
+    col, lo, hi = sql_ident(col), sql_ident(lo), sql_ident(hi)
     return F.expr(
         f"CASE WHEN {hi} <= {lo} THEN 0L"
         f" ELSE ({col} - {lo}) * {top}L div ({hi} - {lo}) END"

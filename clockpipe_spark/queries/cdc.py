@@ -31,12 +31,12 @@ from clockpipe_spark.functions.casts import (
     mongo_epoch_seconds,
     mongo_string_array,
     mongo_timestamp_str,
-    pg_bool_parse,
     _F64_RE,
     _RUST_WS,
-    pg_datetime_trunc,
-    pg_to_int,
-    pg_to_real,
+    pg_bool_parse_sql,
+    pg_datetime_trunc_sql,
+    pg_to_int_sql,
+    pg_to_real_sql,
 )
 
 _CLOG_CTE = f"WITH changelog AS ({CHANGELOG_SQL})"
@@ -82,7 +82,7 @@ def cdc_replica_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "seq",
         F.round("value", 2).alias("value"),
-        pg_datetime_trunc(F.col("ts")).alias("ts"),
+        F.expr(pg_datetime_trunc_sql("ts")).alias("ts"),
     )
 
 
@@ -119,7 +119,7 @@ def cdc_replica_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "seq",
         F.round("value", 2).alias("value"),
-        pg_datetime_trunc(F.col("ts")).alias("ts"),
+        F.expr(pg_datetime_trunc_sql("ts")).alias("ts"),
     )
 
 
@@ -282,17 +282,9 @@ def cdc_cast_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (§1.3): zero-defaults on failed int/real parses, 't|1|true' bool parse,
     sub-second timestamp truncation. Inputs are strings derived
     deterministically from events."""
-    from clockpipe_spark.functions.casts import (
-        pg_bool_parse_sql,
-        pg_datetime_trunc_sql,
-        pg_to_int_sql,
-        pg_to_real_sql,
-    )
-
     events = load_table(spark, sf_dir, "events")
-    # SQL-twin cast builders (r21, guide §1.2): the Column helpers cost
-    # ~620 py4j round trips here (~0.9 s profiled); same trees, one
-    # parse call each (plan_equiv-verified + oracle hash)
+    # SQL-string cast builders: the whole projection parses JVM-side in
+    # one call (a Column build cost ~620 py4j round trips here, ~0.9 s)
     src = events.selectExpr(
         "event_id",
         "get_json_object(props, '$.k') AS k_str",  # numeric string

@@ -2,13 +2,13 @@
 first_sync → sync_loop, pipes/mod.rs:11-16) against a REAL server:
 partitioned snapshot through ``JdbcPostgresSource``, changes through
 the capped materialized ``peek_changes`` → ``decode_pgoutput`` → typed
-projection → keep-last → ``ReplicaStore.merge_changes`` chain, cursor =
+projection → ``ReplicaStore.merge_changes`` (keep-last) chain, cursor =
 the replication slot itself, advanced only AFTER every merge commits
 (T2's peek-then-advance at-least-once protocol, pipes/postgres.rs:
 487-499).  A crash between merge and advance replays the batch; the
 versioned keyed merge absorbs the duplicates.  This module only builds
 each table's typed slice of a peeked batch; the truncate cut,
-keep-last, concurrent merges and the retrying loop are
+concurrent merges and the retrying loop are
 ``sync_job.apply_change_batch`` and ``sync_job.run_change_loop``, the
 same code the parquet-changelog ``SyncJob`` runs.
 

@@ -21,8 +21,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from clockpipe_spark.cdc.ops import apply_changelog_to_snapshot
-
 
 class ReplicaStore:
     def __init__(self, root: str):

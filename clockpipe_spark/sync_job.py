@@ -3,8 +3,8 @@ multi-table sync job — the reference's end-to-end product shape
 (main.rs:27-49 -> pipes/postgres.rs:748-769).
 
 - ``apply_change_batch`` applies one peeked batch: per table, the K3
-  truncate cut, keep-last per key and the store merge, with the tables
-  running concurrently (pipes/postgres.rs:295-446).
+  truncate cut and the store merge (which keeps the last change per
+  key), with the tables running concurrently (pipes/postgres.rs:295-446).
 - ``run_change_loop`` is the loop driver: retry without advancing and
   the reference's four pacing classes, all read from ``PipeConfig``
   (pipes/postgres.rs:260-517).
@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clockpipe_spark.cdc.changelog import changelog_from_events
-from clockpipe_spark.cdc.ops import apply_masks, keep_last_by_key
+from clockpipe_spark.cdc.ops import apply_masks
 from clockpipe_spark.config import PipeConfig
 from clockpipe_spark.streaming.replica import ReplicaStore
 
@@ -59,7 +59,8 @@ def apply_change_batch(
 
     Per table: a TRUNCATE wipes the store inline and only changes after
     the batch's last truncate survive (K3, pipes/postgres.rs:391-417);
-    then keep-last per key and ``store.merge_changes``.  Tables are
+    then ``store.merge_changes``, which keeps the last change per key
+    over the batch and the state.  Tables are
     independent Spark jobs on disjoint stores, so they run concurrently,
     each truncate inside its table's task.  Every table's task runs to
     the end; a failure is then raised as ``WriteFailedError``, and the
@@ -77,7 +78,7 @@ def apply_change_batch(
         # batch would otherwise rewrite a full state version for nothing
         if last_write is None or (cut is not None and last_write <= cut):
             return
-        store.merge_changes(spark, keep_last_by_key(changes, keys, "seq"), keys)
+        store.merge_changes(spark, changes, keys)
 
     with ThreadPoolExecutor(max_workers=8) as pool:
         futures = [pool.submit(apply_one, tbl) for tbl in sorted(op_max)]

@@ -5,11 +5,27 @@ from __future__ import annotations
 
 import datetime
 
+from pyspark.sql import functions as F
+
 from clockpipe_spark.operators.asof import asof_join
 
 
 def _ts(m):
     return datetime.datetime(2024, 1, 1, 12, m)
+
+
+def _with_odd_names(left):
+    """Left payload columns whose names are not SQL identifiers."""
+    return left.withColumn("my col", F.concat(F.lit("e"), "event_id")).withColumn(
+        "a`b", F.col("event_id") * 10
+    )
+
+
+def _odd_names_kept(rows):
+    return all(
+        r["my col"] == f"e{r['event_id']}" and r["a`b"] == r["event_id"] * 10
+        for r in rows
+    )
 
 
 def test_asof_join_semantics(spark):
@@ -27,13 +43,12 @@ def test_asof_join_semantics(spark):
         [(1, _ts(5), 50.0), (1, _ts(10), 99.0)],
         "user_id long, ts timestamp, px double",
     )
-    out = {
-        r["event_id"]: r["px_asof"]
-        for r in asof_join(
-            left, right, by=["user_id"], on="ts", value_cols=["px"]
-        ).collect()
-    }
+    rows = asof_join(
+        _with_odd_names(left), right, by=["user_id"], on="ts", value_cols=["px"]
+    ).collect()
+    out = {r["event_id"]: r["px_asof"] for r in rows}
     assert out == {1: None, 2: 50.0, 3: 50.0, 4: 99.0, 5: None}
+    assert _odd_names_kept(rows)
 
 
 def test_asof_join_forward(spark):
@@ -51,14 +66,13 @@ def test_asof_join_forward(spark):
         [(1, _ts(5), 50.0), (1, _ts(10), 99.0)],
         "user_id long, ts timestamp, px double",
     )
-    out = {
-        r["event_id"]: r["px_asof"]
-        for r in asof_join(
-            left, right, by=["user_id"], on="ts", value_cols=["px"],
-            direction="forward",
-        ).collect()
-    }
+    rows = asof_join(
+        _with_odd_names(left), right, by=["user_id"], on="ts", value_cols=["px"],
+        direction="forward",
+    ).collect()
+    out = {r["event_id"]: r["px_asof"] for r in rows}
     assert out == {1: 50.0, 2: 50.0, 3: 99.0, 4: None, 5: None}
+    assert _odd_names_kept(rows)
 
 
 def test_asof_join_tolerance(spark):
@@ -75,21 +89,20 @@ def test_asof_join_tolerance(spark):
         "user_id long, ts timestamp, px double",
     )
     tol = 2 * 60 * 1_000_000  # 2 minutes in microseconds
-    back = {
-        r["event_id"]: r["px_asof"]
-        for r in asof_join(
-            left, right, by=["user_id"], on="ts", value_cols=["px"],
-            tolerance_us=tol,
-        ).collect()
-    }
+    left = _with_odd_names(left)
+    rows = asof_join(
+        left, right, by=["user_id"], on="ts", value_cols=["px"],
+        tolerance_us=tol,
+    ).collect()
+    back = {r["event_id"]: r["px_asof"] for r in rows}
     assert back == {1: 50.0, 2: None, 3: 99.0}
-    fwd = {
-        r["event_id"]: r["px_asof"]
-        for r in asof_join(
-            left, right, by=["user_id"], on="ts", value_cols=["px"],
-            direction="forward", tolerance_us=tol,
-        ).collect()
-    }
+    assert _odd_names_kept(rows)
+    rows = asof_join(
+        left, right, by=["user_id"], on="ts", value_cols=["px"],
+        direction="forward", tolerance_us=tol,
+    ).collect()
+    fwd = {r["event_id"]: r["px_asof"] for r in rows}
+    assert _odd_names_kept(rows)
     # 12:06 -> next is 12:10 (4 min, out); 12:09 -> 12:10 (1 min, in);
     # 12:11 -> nothing follows -> NULL
     assert fwd == {1: None, 2: 99.0, 3: None}

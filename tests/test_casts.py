@@ -1,5 +1,5 @@
 """Cast-quirk fidelity: the reference's own unit-test vectors
-(FIXTURES.md §B) run through the engine's column expressions.
+(FIXTURES.md §B) run through the engine's cast builders.
 
 Sources: datetime truncation pgoutput.rs:598-628; array parse
 pgoutput.rs:560-596; bool parse pgoutput.rs:157-163; numeric defaults
@@ -11,6 +11,7 @@ from __future__ import annotations
 import datetime
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from clockpipe_spark.functions.casts import (
     binary_base64,
@@ -24,16 +25,22 @@ from clockpipe_spark.functions.casts import (
     mongo_string_array,
     mongo_timestamp_str,
     objectid_hex,
-    pg_bool_parse,
-    pg_datetime_trunc,
+    pg_bool_parse_sql,
+    pg_datetime_trunc_sql,
     pg_string_array_parse,
-    pg_to_int,
-    pg_to_real,
+    pg_to_int_sql,
+    pg_to_real_sql,
 )
 
 
 def _one(spark, expr):
     return spark.range(1).select(expr.alias("v")).first()["v"]
+
+
+def _sql(spark, build, value, dtype="string"):
+    """One value through a SQL-string cast builder."""
+    src = spark.range(1).select(F.lit(value).cast(dtype).alias("s"))
+    return src.selectExpr(f"{build('s')} AS v").first()["v"]
 
 
 def test_datetime_truncation(spark):
@@ -44,9 +51,7 @@ def test_datetime_truncation(spark):
         ("2025-08-17 22:00:00+00", "2025-08-17 22:00:00"),
     ]
     for raw, expected in cases:
-        got = _one(
-            spark, pg_datetime_trunc(F.lit(raw).cast("timestamp"))
-        )
+        got = _sql(spark, pg_datetime_trunc_sql, raw, "timestamp")
         assert got == datetime.datetime.fromisoformat(expected), raw
 
 
@@ -59,18 +64,18 @@ def test_bool_parse(spark):
         (" t ", False),  # reference lowercases but never trims
         (None, False),   # Null -> text_or("false") -> FALSE, not NULL
     ]:
-        got = _one(spark, pg_bool_parse(F.lit(s).cast("string")))
+        got = _sql(spark, pg_bool_parse_sql, s)
         assert got is expected, s
 
 
 def test_numeric_cast_defaults(spark):
     # pgoutput.rs:82-98: failed parses default to zero, not NULL
-    assert _one(spark, pg_to_int(F.lit("12abc"))) == 0
-    assert _one(spark, pg_to_int(F.lit("1.5"))) == 0  # Rust i64 parse fails
-    assert _one(spark, pg_to_int(F.lit("-42"))) == -42
-    assert _one(spark, pg_to_real(F.lit("abc"))) == 0.0
-    assert _one(spark, pg_to_real(F.lit("1.5"))) == 1.5
-    assert _one(spark, pg_to_real(F.lit("-2.25e2"))) == -225.0
+    assert _sql(spark, pg_to_int_sql, "12abc") == 0
+    assert _sql(spark, pg_to_int_sql, "1.5") == 0  # Rust i64 parse fails
+    assert _sql(spark, pg_to_int_sql, "-42") == -42
+    assert _sql(spark, pg_to_real_sql, "abc") == 0.0
+    assert _sql(spark, pg_to_real_sql, "1.5") == 1.5
+    assert _sql(spark, pg_to_real_sql, "-2.25e2") == -225.0
 
 
 def test_numeric_cast_whitespace_fidelity(spark):
@@ -92,7 +97,7 @@ def test_numeric_cast_whitespace_fidelity(spark):
         ("9223372036854775807", 2**63 - 1),
     ]
     for s, expected in int_cases:
-        assert _one(spark, pg_to_int(F.lit(s))) == expected, repr(s)
+        assert _sql(spark, pg_to_int_sql, s) == expected, repr(s)
     real_cases = [
         ("\t1.5", 1.5),
         ("\xa02.5e1 ", 25.0),
@@ -107,8 +112,8 @@ def test_numeric_cast_whitespace_fidelity(spark):
         ("1e999", float("inf")),  # Rust f64 parse saturates, as does Spark
     ]
     for s, expected in real_cases:
-        assert _one(spark, pg_to_real(F.lit(s))) == expected, repr(s)
-    got_nan = _one(spark, pg_to_real(F.lit("NaN")))
+        assert _sql(spark, pg_to_real_sql, s) == expected, repr(s)
+    got_nan = _sql(spark, pg_to_real_sql, "NaN")
     assert got_nan != got_nan  # NaN != NaN
 
 
@@ -127,8 +132,8 @@ def test_pg_string_array_parse(spark):
 
 def test_masking(spark):
     # adapter/mod.rs:183-185: masked column -> typed NULL regardless of value
-    assert _one(spark, mask_column("double")) is None
-    assert _one(spark, mask_column("string")) is None
+    assert _one(spark, mask_column(T.DoubleType())) is None
+    assert _one(spark, mask_column(T.StringType())) is None
 
 
 def test_objectid_and_binary(spark):
@@ -205,47 +210,3 @@ def test_mongo_typed_arrays(spark):
     assert _one(spark, mongo_array_int(empty)) == []
     assert _one(spark, mongo_string_array(empty)) == []
 
-
-def test_sql_twin_builders_match_column_builders(spark):
-    """r21 exprification pin: the SQL-string cast builders must produce
-    the same results as the Column builders on the quirk corpus (they
-    share the regex constants, so this pins the surrounding SQL)."""
-    from clockpipe_spark.functions.casts import (
-        pg_bool_parse,
-        pg_bool_parse_sql,
-        pg_datetime_trunc,
-        pg_datetime_trunc_sql,
-        pg_to_int,
-        pg_to_int_sql,
-        pg_to_real,
-        pg_to_real_sql,
-    )
-    from pyspark.sql import functions as F
-
-    rows = [
-        ("1",), ("-42",), ("+7",), (" 17 ",), ("\t1\n",), ("1_000",),
-        ("1.5",), ("12abc",), ("",), (None,), ("9223372036854775808",),
-        ("1e999",), ("-nan",), ("NaN",), ("inf",), ("-Infinity",),
-        ("t",), ("TRUE",), ("0",), ("1\x1f",), ("1.5d",),
-        ("2024-03-01 10:20:30.999999",),
-    ]
-    df = spark.createDataFrame(rows, "s string").withColumn(
-        "ts", F.lit("2024-03-01 10:20:30.999999").cast("timestamp")
-    )
-    col_form = df.select(
-        "s",
-        pg_to_int(F.col("s")).alias("i"),
-        pg_to_real(F.col("s")).alias("r"),
-        pg_bool_parse(F.col("s")).alias("b"),
-        pg_datetime_trunc(F.col("ts")).alias("t"),
-    )
-    sql_form = df.selectExpr(
-        "s",
-        f"{pg_to_int_sql('s')} AS i",
-        f"{pg_to_real_sql('s')} AS r",
-        f"{pg_bool_parse_sql('s')} AS b",
-        f"{pg_datetime_trunc_sql('ts')} AS t",
-    )
-    a = {r["s"]: (r["i"], str(r["r"]), r["b"], r["t"]) for r in col_form.collect()}
-    b = {r["s"]: (r["i"], str(r["r"]), r["b"], r["t"]) for r in sql_form.collect()}
-    assert a == b

@@ -7,16 +7,15 @@ from __future__ import annotations
 
 import re
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from clockpipe_spark.functions.casts import (
     _F64_RE as _F64_PAT,
     _RUST_WS,
-    pg_bool_parse,
-    pg_to_int,
-    pg_to_real,
+    pg_bool_parse_sql,
+    pg_to_int_sql,
+    pg_to_real_sql,
 )
 
 _INT_RE = re.compile(r"^[+-]?[0-9]+$")
@@ -42,13 +41,21 @@ _value = st.one_of(
                          # 2^64-1 parse as u64 in the reference (text
                          # passed through to ClickHouse) but have no
                          # bigint representation here -> documented
-                         # zero-default divergence (pg_to_int); 2^64 is
+                         # zero-default divergence (pg_to_int_sql); 2^64 is
                          # a parse Err in both engines.
                          "9223372036854775808", "18446744073709551615",
                          "18446744073709551616"]),
         st.sampled_from(list(_RUST_WS) + ["\x1f", ""]),
     ),
 )
+
+# the quirk corpus (signs, padding, separators, NaN/inf spellings, i64
+# overflow, Spark-only suffixes), checked on every run beside the draws
+_QUIRKS = [
+    "1", "-42", "+7", " 17 ", "\t1\n", "1_000", "1.5", "12abc", "",
+    "9223372036854775808", "1e999", "-nan", "NaN", "inf", "-Infinity",
+    "t", "TRUE", "0", "1\x1f", "1.5d", "2024-03-01 10:20:30.999999",
+]
 
 # The models mirror the reference's trim-then-parse (pgoutput.rs:82-98)
 # via the SAME shared set/grammar the engine and the DuckDB oracle use —
@@ -63,7 +70,7 @@ def _py_int(s: str) -> int:
     v = int(t)
     # Out-of-bigint-range -> 0: for v >= 2^64 a parse Err in Rust too;
     # for [2^63, 2^64) a DOCUMENTED divergence (the reference's u64
-    # branch passes the text through to ClickHouse, see pg_to_int).
+    # branch passes the text through to ClickHouse, see pg_to_int_sql).
     return v if -(2**63) <= v < 2**63 else 0
 
 
@@ -80,14 +87,15 @@ def _py_bool(s: str) -> bool:
 
 @settings(max_examples=20, deadline=None, suppress_health_check=list(HealthCheck))
 @given(st.lists(_value, min_size=1, max_size=40))
+@example(values=_QUIRKS)
 def test_cast_quirks_match_reference_semantics(spark, values):
     # (no magnitude filter: i64 overflow -> 0 on both sides since r16)
     df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], "i long, s string")
-    rows = df.select(
+    rows = df.selectExpr(
         "i",
-        pg_to_int(F.col("s")).alias("as_int"),
-        pg_to_real(F.col("s")).alias("as_real"),
-        pg_bool_parse(F.col("s")).alias("as_bool"),
+        f"{pg_to_int_sql('s')} AS as_int",
+        f"{pg_to_real_sql('s')} AS as_real",
+        f"{pg_bool_parse_sql('s')} AS as_bool",
     ).collect()
     by_i = {r["i"]: r for r in rows}
     for i, v in enumerate(values):
@@ -105,6 +113,7 @@ def test_cast_quirks_match_reference_semantics(spark, values):
 
 @settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
 @given(st.lists(_value, min_size=1, max_size=40))
+@example(values=_QUIRKS)
 def test_cast_quirks_match_duckdb_oracle_arms(spark, values):
     """Engine vs the ORACLE's own SQL arms (not just the Python model):
     the driver gate only ever compares fixture-derived values, so the
@@ -116,10 +125,10 @@ def test_cast_quirks_match_duckdb_oracle_arms(spark, values):
     df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], "i long, s string")
     got = {
         r["i"]: (r["as_int"], r["as_real"])
-        for r in df.select(
+        for r in df.selectExpr(
             "i",
-            pg_to_int(F.col("s")).alias("as_int"),
-            pg_to_real(F.col("s")).alias("as_real"),
+            f"{pg_to_int_sql('s')} AS as_int",
+            f"{pg_to_real_sql('s')} AS as_real",
         ).collect()
     }
     con = duckdb.connect()

@@ -83,11 +83,16 @@ def test_align_to_schema(spark):
 
 
 def test_apply_masks(spark):
-    src = spark.createDataFrame([(1, "secret", 3.5)], "id long, name string, bal double")
-    got = apply_masks(src, ["name", "bal"]).first()
+    src = spark.createDataFrame(
+        [(1, "secret", 3.5, ("x",))],
+        "id long, name string, bal double, meta struct<`my f`: string>",
+    )
+    masked = ["name", "bal", "meta"]
+    got = apply_masks(src, masked).first()
     assert got["id"] == 1 and got["name"] is None and got["bal"] is None
+    assert got["meta"] is None
     # schema preserved (typed nulls)
-    assert apply_masks(src, ["name", "bal"]).schema == src.schema
+    assert apply_masks(src, masked).schema == src.schema
 
 
 def test_route_counts(spark):

@@ -66,9 +66,11 @@ def test_zorder_boxes_beat_linear_sort(spark, sf_dir, tmp_path):
     linear = str(tmp_path / "linear")
     events.repartitionByRange(_N_FILES, "tms").write.parquet(linear)
     zpath = str(tmp_path / "zorder")
-    zorder_repartition(events, "user_id", "tms", _N_FILES).write.parquet(
-        zpath
-    )
+    # x is named "u x": any legal column name, not only identifiers
+    spaced = events.withColumnRenamed("user_id", "u x")
+    zorder_repartition(spaced, "u x", "tms", _N_FILES).withColumnRenamed(
+        "u x", "user_id"
+    ).write.parquet(zpath)
     lin_u, lin_t = _mean_spans(linear)
     z_u, z_t = _mean_spans(zpath)
     # linear time-sort: perfect ts clustering but every file spans

@@ -418,13 +418,11 @@ def test_live_scalar_renderings_through_cast_matrix(pg, spark):
     assumes ('+00' suffix stripped upstream) holds; a deployment whose
     server runs another zone must pin the slot session the same way
     (this test is that requirement, written down)."""
-    from pyspark.sql import functions as F
-
     from clockpipe_spark.functions.casts import (
-        pg_bool_parse,
-        pg_datetime_trunc,
-        pg_to_int,
-        pg_to_real,
+        pg_bool_parse_sql,
+        pg_datetime_trunc_sql,
+        pg_to_int_sql,
+        pg_to_real_sql,
     )
 
     pg.sql("ALTER DATABASE postgres SET timezone TO 'UTC'")
@@ -460,19 +458,16 @@ def test_live_scalar_renderings_through_cast_matrix(pg, spark):
     )
     got = {
         r["id"]: (r["b"], r["p"], str(r["t"]), str(r["tz"]), r["bad_int"])
-        for r in df.select(
+        for r in df.selectExpr(
             "id",
-            pg_bool_parse(F.col("ok")).alias("b"),
-            pg_to_real(F.col("price")).alias("p"),
-            pg_datetime_trunc(
-                F.to_timestamp(F.col("ts"))
-            ).alias("t"),
+            f"{pg_bool_parse_sql('ok')} AS b",
+            f"{pg_to_real_sql('price')} AS p",
+            f"{pg_datetime_trunc_sql('to_timestamp(ts)')} AS t",
             # the reference strips the offset upstream with the session
             # pinned UTC; substring(1, 26) is that strip on '+00'
-            pg_datetime_trunc(
-                F.to_timestamp(F.substring(F.col("tstz"), 1, 26))
-            ).alias("tz"),
-            pg_to_int(F.col("price")).alias("bad_int"),
+            f"{pg_datetime_trunc_sql('to_timestamp(substring(tstz, 1, 26))')}"
+            " AS tz",
+            f"{pg_to_int_sql('price')} AS bad_int",
         ).collect()
     }
     assert got[1] == (True, 1234.5, "2024-01-02 03:04:05",
